@@ -12,8 +12,19 @@ ROUND="${1:?usage: check_artifacts.sh <round-label, e.g. r18>}"
 # Compare against the last commit touching the ENGINE SOURCE, not bare
 # HEAD: an artifact-only (or tooling-only) commit would otherwise
 # immediately re-stale the very artifacts it ships (r19 — the check is
-# meant to prove the artifacts describe the shipped CODE).
+# meant to prove the artifacts describe the shipped CODE). Tooling-only
+# commits (scripts/, docs, the artifacts themselves) are exempt because
+# they cannot change what the artifacts measure: the correctness dump,
+# the plan dump and the bench numbers are all produced by src/ as built
+# by build.sbt.
 HEAD_TS=$(git log -1 --format=%ct -- src build.sbt)
+# No such commit (a shallow clone, or a history that never touched those
+# paths) leaves HEAD_TS empty; `[ x -lt "" ]` then prints "integer
+# expression expected" and is false inside the elif, so every artifact
+# would count as fresh. Fall back to bare HEAD, and refuse to compare
+# against nothing.
+[ -n "$HEAD_TS" ] || HEAD_TS=$(git log -1 --format=%ct HEAD)
+: "${HEAD_TS:?no commit to compare the artifacts against}"
 fail=0
 for f in "CORRECTNESS_sf0.1_${ROUND}.json" "PLANDUMP_${ROUND}.txt" \
          "BENCH_LOCAL_${ROUND}.json"; do

@@ -16,17 +16,11 @@ object Cleaning {
   def coerceDouble(c: Column, default: Double = 0.0): Column =
     coalesce(c.try_cast("double"), lit(default))
 
-  def coerceLong(c: Column, default: Long = 0L): Column =
-    coalesce(c.try_cast("long"), lit(default))
-
   /** to_datetime(errors='coerce'): null on unparseable (try_to_timestamp —
     * plain to_timestamp THROWS under ANSI mode, like cast).
     */
   def coerceTimestamp(c: Column, fmt: String = "yyyy-MM-dd HH:mm:ss"): Column =
     try_to_timestamp(c, lit(fmt))
-
-  /** NaN → null (parquet/ES both prefer absent over NaN). */
-  def nanToNull(c: Column): Column = when(isnan(c), lit(null)).otherwise(c)
 
   /** Range-validation predicate builder (index_to_es.py filters). */
   def inRange(c: Column, lo: Double, hi: Double): Column =

@@ -17,14 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Word 3-gram shingles of the normalized text (docs shorter than 3 words
-    * collapse to a single whole-text shingle). Native codegen expression —
-    * one text scan per row; see org.apache.spark.sql.graft.TextExprs for why
-    * the declarative `transform` formulation was catastrophically slower.
-    */
-  def withShingles(df: DataFrame, text: Column): DataFrame =
-    df.withColumn("__shingles", graft.functions.text.wordShingles(text, 3))
-
   /** MinHash signature + LSH banding. Returns candidate pairs with the
     * signature-estimated Jaccard (fraction of agreeing positions).
     *

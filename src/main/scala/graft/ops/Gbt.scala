@@ -319,37 +319,6 @@ object Gbt {
 
   val TreeRounds = 4
 
-  /** Leaf-pattern column after `trees`: 2 bits per tree — leaf index
-    * 0..3 (left-left, left-right, right-left, right-right; a side
-    * without a child split contributes its root-side leaf). Exact
-    * integer CASE chain, identical in the replay.
-    */
-  def patColTree(trees: Seq[Tree]): Column =
-    if (trees.isEmpty) lit(0)
-    else trees.zipWithIndex.map { case (t, j) =>
-      val l = t.lChild
-        .map(c => when(col(BinCols(c.f)) <= c.b, lit(0)).otherwise(lit(1)))
-        .getOrElse(lit(0))
-      val r = t.rChild
-        .map(c => when(col(BinCols(c.f)) <= c.b, lit(2)).otherwise(lit(3)))
-        .getOrElse(lit(2))
-      when(col(BinCols(t.root.f)) <= t.root.b, l).otherwise(r) *
-        lit(1 << (2 * j))
-    }.reduce(_ + _)
-
-  private def leafDelta(t: Tree, leaf: Int): Long = leaf match {
-    case 0 => t.dLL
-    case 1 => t.dLR
-    case 2 => t.dRL
-    case _ => t.dRR
-  }
-
-  /** Tree-model value (integer cents) at a leaf pattern. */
-  def fOfTree(base: Long, trees: Seq[Tree], p: Int): Long =
-    base + trees.zipWithIndex.map { case (t, j) =>
-      leafDelta(t, (p >> (2 * j)) & 3)
-    }.sum
-
   /** Tree-model scoring column: base + per-tree routed leaf delta. */
   def fhatColTree(m: TreeModel): Column =
     m.trees.foldLeft(lit(m.base): Column) { (acc, t) =>

@@ -979,7 +979,7 @@ object DatalakeQueries {
       .repartition(1), root, "3", Seq("day"))
     def evidence(stage: String,
         dropped: Long): (String, Long, Long, Long, Double) = {
-      val r = Datalake.readEvolved(spark, root)
+      val r = Datalake.readPublished(spark, root)
         .agg(count(lit(1)).cast("long").as("n_rows"),
           decSum2(col("value")).cast("double").as("sum_value"))
         .collect()(0)

@@ -118,8 +118,8 @@ object LayoutQueries {
     val root = DatalakeQueries.tempLakeRoot() + "/li_stats"
     Datalake.publish(layout, root, "1", Seq("bucket"), Seq("ok_m"))
     def probe(tag: String, lo: Long, hi: Long): DataFrame = {
-      val s = Datalake.readPublishedPruned(spark, root, "ok_m",
-        lo.toDouble, hi.toDouble)
+      val s = Datalake.readPublishedPruned(spark, root,
+        Seq(("ok_m", lo.toDouble, hi.toDouble)))
       s.df.filter(col("ok_m").between(lo, hi))
         .agg(count(lit(1)).cast("long").as("n_rows"),
           decSum2(col("l_extendedprice")).cast("double").as("revenue"))
@@ -139,7 +139,7 @@ object LayoutQueries {
     * plain optimize() produces), gets rewritten by
     * `Datalake.optimizeZorder` into 64 Morton-clustered files with a
     * fresh stats sidecar, and both versions are probed with the SAME
-    * 2-dim rectangle through the real `readPublishedPrunedMulti` read
+    * 2-dim rectangle through the real `readPublishedPruned` read
     * path. Evidence per layout: files_total / files_scanned /
     * rows_in_files, plus the exact aggregate over the pruned scan — the
     * n_rows/revenue columns must be IDENTICAL across the two rows (and
@@ -169,7 +169,7 @@ object LayoutQueries {
     Datalake.publish(linear, root, "1", Seq("xb"), Seq("x", "y"))
     val (lo, hi) = (128L, 255L)
     def probe(layout: String): DataFrame = {
-      val s = Datalake.readPublishedPrunedMulti(spark, root,
+      val s = Datalake.readPublishedPruned(spark, root,
         Seq(("x", lo.toDouble, hi.toDouble), ("y", lo.toDouble, hi.toDouble)))
       s.df.filter(col("x").between(lo, hi) && col("y").between(lo, hi))
         .agg(count(lit(1)).cast("long").as("n_rows"),
@@ -225,7 +225,7 @@ object LayoutQueries {
     Datalake.publish(linear, root, "1", Seq("xb"), Seq("x", "y"))
     val (lo, hi) = (96L, 223L) // unaligned on purpose — see scaladoc
     def probe(layout: String): DataFrame = {
-      val s = Datalake.readPublishedPrunedMulti(spark, root,
+      val s = Datalake.readPublishedPruned(spark, root,
         Seq(("x", lo.toDouble, hi.toDouble), ("y", lo.toDouble, hi.toDouble)))
       s.df.filter(col("x").between(lo, hi) && col("y").between(lo, hi))
         .agg(count(lit(1)).cast("long").as("n_rows"),

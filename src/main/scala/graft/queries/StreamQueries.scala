@@ -784,7 +784,7 @@ object StreamQueries {
     * DELETE rows (label `e1+dv` — deterministic, the vector dir's UUID
     * never leaks), and the e2 feed diffs against the DELETED state —
     * so a reader that resurrected hidden rows (raw base scan instead of
-    * readToken) would both emit wrong deletes and corrupt the next
+    * the snapshot scan) would both emit wrong deletes and corrupt the next
     * diff's preimages.
     */
   def qStreamCdcDelete(spark: SparkSession, dir: String): DataFrame = {

@@ -326,12 +326,7 @@ object Datalake {
     */
   def readAsOf(spark: SparkSession, tableRoot: String,
       tsMillis: Long): DataFrame =
-    versionAsOf(spark, tableRoot, tsMillis) match {
-      case Some(v) => readVersion(spark, tableRoot, v)
-      case None => throw new IllegalArgumentException(
-        s"no version of $tableRoot committed at or before $tsMillis — " +
-          "the timestamp predates the table's first recorded commit")
-    }
+    scan(spark, resolve(spark, tableRoot, Selector.AsOf(tsMillis)))
 
   /** Commit a token DERIVED from a snapshot taken at `seqAtRead` — the
     * maintenance ops' commit step (r14, completing the multi-writer
@@ -357,6 +352,43 @@ object Datalake {
       syncManifestIfNewest(spark, tableRoot, seqAtRead + 1, token)
       true
     } else false
+
+  /** The ONE derive-and-commit loop of the rewrites built from the
+    * current state (merge, partition overwrite, both OPTIMIZEs, the curve
+    * rewrites). Under the per-root stripe (in-process serialization) each
+    * attempt takes the commit sequence, THEN resolves the manifest once,
+    * lets `derive` stage the next version from that one snapshot, and
+    * commits through [[commitDerivedToken]]. A lost claim means a
+    * cross-process CAS writer (a delete committing a new dv= token, a
+    * racing publishCas) landed inside the read → commit window: swapping
+    * the rewrite in would discard that commit, so the staged version and
+    * any vector it carried are deleted and the rewrite is re-derived over
+    * the winner's state. `derive` returns the staged version, the
+    * relative dir of a vector carried into it, and the caller's result.
+    */
+  private def deriveAndCommit[T](spark: SparkSession, tableRoot: String,
+      op: String)(derive: Snapshot => (String, Option[String], T)): T = {
+    val fs = new org.apache.hadoop.fs.Path(tableRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    withRootLock(spark, tableRoot) {
+      var attempt = 0
+      while (attempt < 5) {
+        attempt += 1
+        val seqAtRead = latestCommitSeq(spark, tableRoot)
+        val (newV, carried, out) =
+          derive(resolve(spark, tableRoot, Selector.Latest))
+        val token = carried.fold(s"v=$newV")(rel => s"dv=v=$newV;$rel")
+        if (commitDerivedToken(spark, tableRoot, seqAtRead, token))
+          return out
+        try {
+          (s"v=$newV" +: carried.toSeq).foreach(rel =>
+            fs.delete(new org.apache.hadoop.fs.Path(s"$tableRoot/$rel"), true))
+        } catch { case _: Throwable => () }
+      }
+      throw new ConcurrentCommitException(
+        s"$op on $tableRoot lost 5 commit races — retry")
+    }
+  }
 
   /** Atomically point `tableRoot`'s MANIFEST at `token` — the one-small-
     * PUT commit both [[publish]] (token `v=<name>`) and [[shallowClone]]
@@ -396,19 +428,6 @@ object Datalake {
       .rename(tmp, manifest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Resolve a manifest token to the data directory it names: `v=<name>`
-    * is a version dir under this root, `ref=<path>` an absolute pointer
-    * into ANOTHER table's version dir (a shallow clone before its first
-    * own publish).
-    */
-  private def resolveToken(tableRoot: String, token: String): String =
-    parseDvToken(token) match {
-      case Some((base, _)) => resolveToken(tableRoot, base)
-      case None =>
-        if (token.startsWith("ref=")) token.stripPrefix("ref=")
-        else s"$tableRoot/$token"
-    }
-
   // ==================== deletion vectors ====================
   //
   // Row-level DELETE without rewriting any data file (the Delta/Iceberg
@@ -427,117 +446,152 @@ object Datalake {
 
   private val DvDir = "_dv"
 
-  /** `dv=<base token>;<relative dv dir>` → (base, dvRel). */
-  private def parseDvToken(token: String): Option[(String, String)] =
-    if (!token.startsWith("dv=")) None
-    else {
-      val body = token.stripPrefix("dv=")
-      val i = body.lastIndexOf(';')
-      if (i < 0) None else Some((body.substring(0, i), body.substring(i + 1)))
+  // ==================== snapshots ====================
+  //
+  // Every read and every derived rewrite resolves what it reads ONCE into
+  // an immutable [[Snapshot]] and turns it into a frame through ONE
+  // [[scan]] — the data-source shape of Spark SQL (a relation is resolved
+  // once, then scanned with what it can push). The token is read once per
+  // snapshot, so its data directory, evolved chain and deletion vector
+  // always belong to the same commit: reading them separately could pair
+  // one commit's files with another commit's vector or partition layout.
+  //
+  // Tokens: `v=<name>` is a version dir under the table root, `ref=<path>`
+  // an absolute pointer into ANOTHER table's version dir (a shallow clone
+  // before its first own publish), `dv=<base token>;<dv dir>` a base
+  // token plus a deletion vector.
+
+  /** What a read addresses: the manifest-current commit, a version name,
+    * the version current AS OF a timestamp, an alias, or a raw commit /
+    * catalog token.
+    */
+  private[graft] sealed trait Selector
+  private[graft] object Selector {
+    case object Latest extends Selector
+    final case class Version(name: String) extends Selector
+    final case class AsOf(tsMillis: Long) extends Selector
+    final case class Alias(name: String) extends Selector
+    final case class Token(token: String) extends Selector
+  }
+
+  /** One resolved commit: its token split into the `base` data token
+    * (`v=<name>` or `ref=<path>`) and the live deletion vector's dir
+    * relative to `root`, the data directory `base` names (`ref=`
+    * followed), and the evolved `_BASE` chain newest → oldest (empty for
+    * a plain version).
+    */
+  private[graft] final case class Snapshot(root: String, base: String,
+      dataDir: String, segments: Seq[EvolvedSegment],
+      dvRel: Option[String]) {
+    /** The version name successors count from (`ref=<path>` for an
+      * undiverged clone). A dv= token names its BASE version: that dir is
+      * what vacuum must protect (deleting it would orphan the live
+      * vector). */
+    def version: String = base.stripPrefix("v=")
+
+    /** Deterministic display label: a vector commit labels `<base>+dv`
+      * (the vector dir name carries a UUID and must not leak into hashed
+      * output). */
+    def label: String =
+      (if (base.startsWith("ref=")) "ref" else version) +
+        (if (dvRel.isDefined) "+dv" else "")
+  }
+
+  /** Resolve `sel` against `tableRoot` — the ONE place a token is parsed,
+    * a `ref=` followed and a `_SPEC` dir recognized as the head of an
+    * evolved chain. A timestamp before the first recorded commit fails
+    * loudly (returning the empty table would silently rewrite history).
+    * (private[graft], like [[scan]]: the streaming change-feed source
+    * resolves commit tokens through it.)
+    */
+  private[graft] def resolve(spark: SparkSession, tableRoot: String,
+      sel: Selector): Snapshot = {
+    val token = sel match {
+      case Selector.Latest => manifestToken(spark, tableRoot).getOrElse(
+        throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
+      case Selector.Version(v) => s"v=$v"
+      case Selector.AsOf(ts) => versionAsOf(spark, tableRoot, ts) match {
+        case Some(v) => s"v=$v"
+        case None => throw new IllegalArgumentException(
+          s"no version of $tableRoot committed at or before $ts — " +
+            "the timestamp predates the table's first recorded commit")
+      }
+      case Selector.Alias(a) => s"v=${resolveAlias(spark, tableRoot, a)}"
+      case Selector.Token(t) => t
     }
-
-  /** Fully-qualified data dir, for relativizing `_metadata.file_path`
-    * (which Spark reports as a fully-qualified URI).
-    */
-  private def qualifiedPath(spark: SparkSession, dataPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dataPath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(p).toString
+    val cut = token.lastIndexOf(';')
+    val (base, dvRel) =
+      if (token.startsWith("dv=") && cut >= 0)
+        (token.substring(3, cut), Some(token.substring(cut + 1)))
+      else (token, None)
+    val dataDir =
+      if (base.startsWith("ref=")) base.stripPrefix("ref=")
+      else s"$tableRoot/$base"
+    val dir = new org.apache.hadoop.fs.Path(dataDir)
+    val evolved = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(new org.apache.hadoop.fs.Path(dir, EvolvedSpec))
+    Snapshot(tableRoot, base, dataDir,
+      if (evolved) segmentChain(spark, dataDir) else Nil, dvRel)
   }
 
-  /** Position columns (__file relative to the version dir, __pos) for
-    * every row of `scan` — the parquet `_metadata` hidden columns, so a
-    * row's identity is (file, row ordinal) with zero bookkeeping columns
-    * stored in the data.
-    */
-  private def withRowPosition(spark: SparkSession, scan: DataFrame,
-      dataPath: String): DataFrame = {
-    val base = qualifiedPath(spark, dataPath)
-    scan.select(col("*"),
-      expr(s"substring(_metadata.file_path, ${base.length + 2})")
-        .as("__file"),
-      col("_metadata.row_index").as("__pos"))
-  }
+  /** The manifest-current snapshot, None before the first publish. */
+  private def current(spark: SparkSession,
+      tableRoot: String): Option[Snapshot] =
+    manifestToken(spark, tableRoot)
+      .map(t => resolve(spark, tableRoot, Selector.Token(t)))
 
-  /** `scan` (any frame read from files under `dataPath` — the full dir
-    * or a pruned file subset) minus the DV's positions. Plain
-    * (non-broadcast-forced) left-anti: AQE broadcasts a small vector,
-    * and a huge one co-partitions on (__file, __pos) — either way no
-    * row of the base table is read twice. ONE definition for every DV
-    * read path so the relativization/join contract cannot drift.
+  /** The frame a snapshot serves — the ONE place segments are unioned,
+    * `_metadata` row positions attached and the deletion vector
+    * anti-joined. `files` (paths relative to a plain snapshot's data dir)
+    * narrows the scan to a pruned subset and keeps the version's Hive
+    * partition columns; `positions` keeps `__file`/`__pos` on the result.
+    *
+    * A row's identity is (file, row ordinal) from the parquet `_metadata`
+    * hidden columns — zero bookkeeping columns stored in the data. `__file`
+    * is relative to the version dir for a plain base and to the TABLE
+    * ROOT for an evolved one (round 17 — per-segment deletion vectors): a
+    * chain spans several version dirs, so one version-dir-relative path
+    * cannot address its rows, while "v=1/add/part-….parquet" names every
+    * row of every segment and stays valid across later appends because
+    * segments are immutable. One rule for the writer and every reader, so
+    * the contract cannot drift. Positions attach BEFORE the union —
+    * `_metadata` is a per-scan hidden column. The anti-join is plain
+    * left-anti (not broadcast-forced): AQE broadcasts a small vector, and
+    * a huge one co-partitions on (__file, __pos) — either way no row of
+    * the base table is read twice. Segments union by NAME: a partition
+    * column is data in the segments written before it became a key and
+    * directory-encoded after, so column order may differ across layouts,
+    * never the logical schema.
     */
-  private def applyDvTo(spark: SparkSession, scan: DataFrame,
-      dataPath: String, dvPath: String): DataFrame =
-    withRowPosition(spark, scan, dataPath)
-      .join(spark.read.parquet(dvPath), Seq("__file", "__pos"), "left_anti")
-      .drop("__file", "__pos")
-
-  private def applyDv(spark: SparkSession, dataPath: String,
-      dvPath: String): DataFrame =
-    applyDvTo(spark, spark.read.parquet(dataPath), dataPath, dvPath)
-
-  /** Per-segment scans of an evolved chain with TABLE-ROOT-relative
-    * positions (round 17 — per-segment deletion vectors): a chain spans
-    * several version directories, so one version-dir-relative path
-    * cannot address its rows; relativizing against the table root
-    * ("v=1/add/part-….parquet", ordinal) names every row of every
-    * segment unambiguously, and stays valid across later
-    * [[publishEvolved]] appends because segments are immutable. The
-    * position columns attach BEFORE the union — `_metadata` is a
-    * per-scan hidden column.
-    */
-  private def chainWithPositions(spark: SparkSession, tableRoot: String,
-      anchor: String): DataFrame = {
-    val rootQ = qualifiedPath(spark, tableRoot)
-    segmentChain(spark, anchor)
-      .map(s => spark.read.parquet(s.addPath).select(col("*"),
-        expr(s"substring(_metadata.file_path, ${rootQ.length + 2})")
-          .as("__file"),
+  private[graft] def scan(spark: SparkSession, s: Snapshot,
+      files: Option[Seq[String]] = None,
+      positions: Boolean = false): DataFrame = {
+    val reads = files match {
+      case None if s.segments.nonEmpty =>
+        s.segments.map(seg => spark.read.parquet(seg.addPath))
+      case None => Seq(spark.read.parquet(s.dataDir))
+      case Some(Nil) => Seq(spark.read.parquet(s.dataDir).filter(lit(false)))
+      case Some(fs) =>
+        require(s.segments.isEmpty, "a file subset addresses a plain version")
+        Seq(spark.read.option("basePath", s.dataDir)
+          .parquet(fs.map(f => s"${s.dataDir}/$f"): _*))
+    }
+    val withPos = positions || s.dvRel.isDefined
+    val all = (if (!withPos) reads else {
+      // _metadata.file_path is a fully-qualified URI
+      val rel = new org.apache.hadoop.fs.Path(
+        if (s.segments.isEmpty) s.dataDir else s.root)
+      val from = rel.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(rel).toString.length + 2
+      reads.map(_.select(col("*"),
+        expr(s"substring(_metadata.file_path, $from)").as("__file"),
         col("_metadata.row_index").as("__pos")))
-      .reduce(_.unionByName(_))
+    }).reduce(_.unionByName(_))
+    val live = s.dvRel.fold(all)(dv => all.join(
+      spark.read.parquet(s"${s.root}/$dv"), Seq("__file", "__pos"),
+      "left_anti"))
+    if (withPos && !positions) live.drop("__file", "__pos") else live
   }
-
-  /** Chain state minus a ROOT-relative deletion vector — the evolved
-    * twin of [[applyDvTo]]. Which relativization a `dv=` token carries
-    * is determined by its BASE: an evolved base (a `_SPEC` dir) always
-    * stores root-relative positions, a plain base version-dir-relative
-    * ones — one rule for writer and every reader, so the contract
-    * cannot drift.
-    */
-  private def applyDvChain(spark: SparkSession, tableRoot: String,
-      anchor: String, dvPath: String): DataFrame =
-    chainWithPositions(spark, tableRoot, anchor)
-      .join(spark.read.parquet(dvPath), Seq("__file", "__pos"), "left_anti")
-      .drop("__file", "__pos")
-
-  private def isEvolvedDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(p, EvolvedSpec))
-  }
-
-  /** Resolve a manifest token to a readable frame — DV tokens apply
-    * their vector, everything else is a plain scan of the resolved dir.
-    * (private[graft]: the streaming change-feed source resolves commit
-    * tokens through this.)
-    */
-  private[graft] def readToken(spark: SparkSession, tableRoot: String,
-      token: String): DataFrame =
-    parseDvToken(token) match {
-      // chain-aware DV (round 17): an evolved base applies the ROOT-
-      // relative vector over the whole `_BASE` chain; a plain base keeps
-      // the original version-dir-relative contract
-      case Some((base, dvRel)) =>
-        val dataPath = resolveToken(tableRoot, base)
-        if (isEvolvedDir(spark, dataPath))
-          applyDvChain(spark, tableRoot, dataPath, s"$tableRoot/$dvRel")
-        else applyDv(spark, dataPath, s"$tableRoot/$dvRel")
-      // chain-aware (round 16): a v= token naming an evolved segment
-      // resolves to its chain STATE, so changeFeedTokens between
-      // evolved versions emits exactly the later segments' rows as
-      // inserts instead of dying on a dir with no top-level parquet.
-      case None => readDataDir(spark, resolveToken(tableRoot, token))
-    }
 
   // ==================== multi-table transactions ====================
   //
@@ -693,7 +747,7 @@ object Datalake {
       snapshot: Map[String, String], table: String): DataFrame = {
     val v = snapshot.getOrElse(table,
       throw new IllegalArgumentException(s"table $table not in snapshot"))
-    spark.read.parquet(s"$catalogRoot/$table/$v")
+    scan(spark, resolve(spark, s"$catalogRoot/$table", Selector.Token(v)))
   }
 
   /** ADOPT an externally-written data directory as a published version:
@@ -731,20 +785,8 @@ object Datalake {
     */
   def optimizeCompact(spark: SparkSession, tableRoot: String,
       minRows: Long, statsCols: Seq[String] = Nil): (String, Int, Int) =
-    // under the per-root stripe (in-process serialization); the commit
-    // rides the log on CAS tables (commitDerivedToken): the rewrite is
-    // derived from the token read at the top, so a delete committing a
-    // new dv= token inside the read→commit window — same JVM OR another
-    // process — forces a re-derivation instead of being discarded
-    withRootLock(spark, tableRoot) {
-    var attempt = 0
-    while (attempt < 5) {
-    attempt += 1
-    val seqAtRead = latestCommitSeq(spark, tableRoot)
-    val token = manifestToken(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    val dv = parseDvToken(token)
-    val dataPath = resolveToken(tableRoot, token)
+    deriveAndCommit(spark, tableRoot, "optimizeCompact") { snap =>
+    val dataPath = snap.dataDir
     val stats = readFileStats(spark, dataPath)
     require(stats.nonEmpty,
       s"no stats sidecar under $dataPath — publish with statsCols first")
@@ -773,20 +815,16 @@ object Datalake {
     }
     small.groupBy(f => partDir(f.file)).toSeq.sortBy(_._1)
       .foreach { case (pd, files) =>
-        // no basePath: the file schema alone (partition values live in
-        // the DIRECTORY; injecting them as data columns here would
-        // collide with the byte-copied files' schema on read)
-        val raw = spark.read
-          .parquet(files.map(f => s"$dataPath/${f.file}"): _*)
         // a live deletion vector must be FOLDED into the rewrite of the
         // small files (a raw compaction would resurrect their deleted
         // rows — review finding); the copied files keep their positions,
-        // so their share of the vector is carried forward below instead
-        val live = dv match {
-          case Some((_, dvRel)) =>
-            applyDvTo(spark, raw, dataPath, s"$tableRoot/$dvRel")
-          case None => raw
-        }
+        // so their share of the vector is carried forward below instead.
+        // The file schema alone is written: partition values live in the
+        // DIRECTORY, and as data columns they would collide with the
+        // byte-copied files' schema on read.
+        val live = scan(spark, snap, Some(files.map(_.file)))
+          .drop(pd.split('/').filter(_.nonEmpty)
+            .map(_.takeWhile(_ != '=')).toSeq: _*)
         val outDir = if (pd.isEmpty) dst.toString else s"$dst/$pd"
         live.coalesce(1)
           .write.mode(SaveMode.Append).option("compression", "snappy")
@@ -798,45 +836,30 @@ object Datalake {
     // names, identical row positions in the new dir); the compacted
     // file's share was folded above. Empty carried vector → the token
     // returns to plain v= and the old vector becomes vacuum garbage.
-    val newToken = dv match {
-      case Some((_, dvRel)) =>
-        // __file lives in the _metadata domain: Spark URL-encodes the
-        // file URI (a Hive value dir like `p=NOT SPECIFIED` appears as
-        // NOT%20SPECIFIED), while the stats sidecar records DECODED
-        // names. Encode before comparing, or the carried vector silently
-        // drops every copied file in such a partition — the deleted rows
-        // resurrect (found by q_compact_partitioned's oracle).
-        def metaRel(rel: String): String =
-          new org.apache.hadoop.fs.Path("/" + rel).toUri.toString
-            .stripPrefix("/")
-        val bigNames = big.map(f => metaRel(f.file))
-        val carried = spark.read.parquet(s"$tableRoot/$dvRel")
-          .filter(col("__file").isin(bigNames: _*))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (carried.count() > 0) {
-            val rel =
-              s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
-            carried.write.parquet(s"$tableRoot/$rel")
-            s"dv=v=$newV;$rel"
-          } else s"v=$newV"
-        } finally { carried.unpersist(blocking = false); () }
-      case None => s"v=$newV"
+    val carriedDv = snap.dvRel.flatMap { dvRel =>
+      // __file lives in the _metadata domain: Spark URL-encodes the
+      // file URI (a Hive value dir like `p=NOT SPECIFIED` appears as
+      // NOT%20SPECIFIED), while the stats sidecar records DECODED
+      // names. Encode before comparing, or the carried vector silently
+      // drops every copied file in such a partition — the deleted rows
+      // resurrect (found by q_compact_partitioned's oracle).
+      def metaRel(rel: String): String =
+        new org.apache.hadoop.fs.Path("/" + rel).toUri.toString
+          .stripPrefix("/")
+      val bigNames = big.map(f => metaRel(f.file))
+      val carried = spark.read.parquet(s"$tableRoot/$dvRel")
+        .filter(col("__file").isin(bigNames: _*))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (carried.count() > 0) {
+          val rel =
+            s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
+          carried.write.parquet(s"$tableRoot/$rel")
+          Some(rel)
+        } else None
+      } finally { carried.unpersist(blocking = false); () }
     }
-    if (commitDerivedToken(spark, tableRoot, seqAtRead, newToken))
-      return (newV, small.length, big.length)
-    // lost to a cross-process CAS writer: discard the staged version dir
-    // AND the carried vector (if one was written) and re-derive
-    try {
-      fs.delete(dst, true)
-      parseDvToken(newToken).foreach { case (_, rel) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tableRoot/$rel"), true)
-      }
-      ()
-    } catch { case _: Throwable => () }
-    }
-    throw new ConcurrentCommitException(
-      s"optimizeCompact on $tableRoot lost 5 commit races — retry")
+    (newV, carriedDv, (newV, small.length, big.length))
     }
 
   /** DYNAMIC PARTITION OVERWRITE as a versioned commit (Hive's
@@ -860,34 +883,16 @@ object Datalake {
       batch: DataFrame, partCols: Seq[String],
       statsCols: Seq[String] = Nil): String = {
     require(partCols.nonEmpty, "overwritePartitions needs partition columns")
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stripe = in-process serialization; the commit rides the log on CAS
-    // tables (commitDerivedToken) so a cross-process writer landing
-    // inside the token-read → commit window forces a re-derivation
-    withRootLock(spark, tableRoot) {
-      var attempt = 0
-      while (attempt < 5) {
-        attempt += 1
-        val seqAtRead = latestCommitSeq(spark, tableRoot)
-        val token = manifestToken(spark, tableRoot).getOrElse(
-          throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-        val cur = readToken(spark, tableRoot, token)
-        val parts = batch.select(partCols.map(col): _*).distinct()
-        val untouched = cur.join(
-          org.apache.spark.sql.functions.broadcast(parts), partCols,
-          "left_anti")
-        val next = untouched.unionByName(batch.select(cur.columns.map(col): _*))
-        val newV = nextNumericVersion(spark, tableRoot, None, "")
-        stageVersion(next, tableRoot, newV, partCols, statsCols)
-        if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-          return newV
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableRoot/v=$newV"), true); () }
-        catch { case _: Throwable => () }
-      }
-      throw new ConcurrentCommitException(
-        s"overwritePartitions on $tableRoot lost 5 commit races — retry")
+    deriveAndCommit(spark, tableRoot, "overwritePartitions") { snap =>
+      val cur = scan(spark, snap)
+      val parts = batch.select(partCols.map(col): _*).distinct()
+      val untouched = cur.join(
+        org.apache.spark.sql.functions.broadcast(parts), partCols,
+        "left_anti")
+      val next = untouched.unionByName(batch.select(cur.columns.map(col): _*))
+      val newV = nextNumericVersion(spark, tableRoot, None, "")
+      stageVersion(next, tableRoot, newV, partCols, statsCols)
+      (newV, None, newV)
     }
   }
 
@@ -925,34 +930,16 @@ object Datalake {
       keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       statsCols: Seq[String] = Nil,
-      evolveSchema: Boolean = false): String = {
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withRootLock(spark, tableRoot) {
-      var attempt = 0
-      while (attempt < 5) {
-        attempt += 1
-        val seqAtRead = latestCommitSeq(spark, tableRoot)
-        val token = manifestToken(spark, tableRoot).getOrElse(
-          throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-        val base = readToken(spark, tableRoot, token)
-        val merged = mergeFrames(base, delta, keys, deleteWhen, evolveSchema)
-        val parts = currentDataPath(spark, tableRoot)
-          .map(detectPartitionColumns(spark, _)).getOrElse(Nil)
-        val newV = nextNumericVersion(spark, tableRoot,
-          currentVersion(spark, tableRoot), "-merged")
-        stageVersion(merged, tableRoot, newV, parts, statsCols)
-        if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-          return newV
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableRoot/v=$newV"), true); () }
-        catch { case _: Throwable => () }
-      }
-      throw new ConcurrentCommitException(
-        s"mergeInto on $tableRoot lost 5 commit races — retry (or use " +
-          "mergeTransact, the cross-process form)")
+      evolveSchema: Boolean = false): String =
+    deriveAndCommit(spark, tableRoot, "mergeInto") { snap =>
+      val merged = mergeFrames(scan(spark, snap), delta, keys, deleteWhen,
+        evolveSchema)
+      val newV = nextNumericVersion(spark, tableRoot, Some(snap.version),
+        "-merged")
+      stageVersion(merged, tableRoot, newV,
+        detectPartitionColumns(spark, snap.dataDir), statsCols)
+      (newV, None, newV)
     }
-  }
 
   /** [[mergeInto]]'s CROSS-PROCESS form: the same three-arm merge run as
     * an optimistic [[transact]]ion over the commit log — two concurrent
@@ -1115,39 +1102,29 @@ object Datalake {
     // token would resurrect those writes. The log is purely the
     // race ARBITER here; among CAS-only writers the two agree.
     val seq = seqOverride.getOrElse(latestCommitSeq(spark, tableRoot))
-    val token = manifestToken(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    val (baseToken, existingDv) = parseDvToken(token) match {
-      case Some((b, d)) => (b, Some(s"$tableRoot/$d"))
-      case None => (token, None)
-    }
-    val dataPath = resolveToken(tableRoot, baseToken)
+    val snap = resolve(spark, tableRoot, Selector.Latest)
     // evolved chains (round 17 — retires the r16 loud refusal): the
     // vector addresses rows ROOT-relatively across every segment of the
     // `_BASE` chain, so a row-level delete on a long-lived evolved table
     // is the same seconds-scale sidecar commit as on a plain version —
     // no rewriteEvolved required. The predicate evaluates against the
-    // RAW chain (re-matching an already-deleted row is harmless: the
+    // RAW base (re-matching an already-deleted row is harmless: the
     // merge below is a distinct union).
-    val newDel =
-      (if (isEvolvedDir(spark, dataPath))
-        chainWithPositions(spark, tableRoot, dataPath).filter(predicate)
-      else
-        withRowPosition(spark,
-          spark.read.parquet(dataPath).filter(predicate), dataPath))
-        .select(col("__file"), col("__pos"))
+    val newDel = scan(spark, snap.copy(dvRel = None), positions = true)
+      .filter(predicate).select(col("__file"), col("__pos"))
     // persist so the count and the write share one evaluation — the
     // previous read-back-and-count paid a whole extra scan of the
     // accumulated vector per delete (review finding)
-    val merged = existingDv
-      .map(p => spark.read.parquet(p).unionByName(newDel).distinct())
+    val merged = snap.dvRel
+      .map(d => spark.read.parquet(s"$tableRoot/$d").unionByName(newDel)
+        .distinct())
       .getOrElse(newDel.distinct())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = merged.count()
       val rel = s"$DvDir/dv-${java.util.UUID.randomUUID().toString.take(8)}"
       merged.write.parquet(s"$tableRoot/$rel")
-      val newToken = s"dv=$baseToken;$rel"
+      val newToken = s"dv=${snap.base};$rel"
       if (claimCommit(spark, tableRoot, seq + 1, newToken)) {
         syncManifestIfNewest(spark, tableRoot, seq + 1, newToken)
         Some(n)
@@ -1627,18 +1604,17 @@ object Datalake {
     while (attempt < maxAttempts) {
       attempt += 1
       val seq = latestCommitSeq(spark, tableRoot)
-      // snapshots read THROUGH the token (readToken), not the raw
+      // snapshots read THROUGH the token (resolve + scan), not the raw
       // resolved dir: since deletes ride the commit log (r14) the newest
       // record can be a dv= token, and a raw base read would resurrect
       // every deleted row into the transaction's derivation — the same
       // fold discipline optimize/mergeInto follow
       val cur =
-        if (seq > 0L)
+        (if (seq > 0L)
           commitTokenAt(fs, root, seq)
-            .map(t => readToken(spark, tableRoot, t))
+            .map(t => resolve(spark, tableRoot, Selector.Token(t)))
         else // never CAS-written: adopt a plain-publish table if present
-          manifestToken(spark, tableRoot)
-            .map(t => readToken(spark, tableRoot, t))
+          current(spark, tableRoot)).map(scan(spark, _))
       try return publishCas(transform(cur), tableRoot, seq, partitionBy,
         statsCols)
       catch { case e: ConcurrentCommitException => lastErr = e }
@@ -1666,18 +1642,13 @@ object Datalake {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(srcRoot)
     val fs = root.getFileSystem(conf)
-    val m = new org.apache.hadoop.fs.Path(root, "MANIFEST")
-    if (!fs.exists(m))
-      throw new IllegalStateException(s"no MANIFEST under $srcRoot")
-    val in = fs.open(m)
-    val token = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
+    val snap = resolve(spark, srcRoot, Selector.Latest)
     // qualify to an absolute URI so the pointer survives any working-dir
     // or default-FS difference between writer and reader
     val abs = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(resolveToken(srcRoot, token))).toString
-    parseDvToken(token) match {
-      case Some((_, dvRel)) =>
+      new org.apache.hadoop.fs.Path(snap.dataDir)).toString
+    snap.dvRel match {
+      case Some(dvRel) =>
         // a LIVE DELETION VECTOR is commit state the clone must carry —
         // a bare ref= pointer at the base dir would resurrect the
         // source's deleted rows in the clone (review finding, round 14).
@@ -1713,8 +1684,8 @@ object Datalake {
   // documents: evolution changes the layout of FUTURE data only; OPTIMIZE
   // is the tool that migrates history). Retention caveat = shallowClone's:
   // base segments are live references — vacuum must keep the chain, and a
-  // full rewrite (one publish of readEvolved's union under the final
-  // spec) is how a table leaves the evolved state.
+  // full rewrite ([[rewriteEvolved]]: one publish of the chain's union
+  // under the final spec) is how a table leaves the evolved state.
 
   private val EvolvedAdd = "add"
   private val EvolvedSpec = "_SPEC"
@@ -1741,7 +1712,8 @@ object Datalake {
     */
   def publishEvolved(df: DataFrame, tableRoot: String, version: String,
       partitionBy: Seq[String]): Unit = {
-    val base = currentDataPath(df.sparkSession, tableRoot)
+    val cur = current(df.sparkSession, tableRoot)
+    val base = cur.map(_.dataDir)
     // re-publishing the manifest-current version name would write a
     // _BASE pointing at the segment's OWN directory (SaveMode.Overwrite
     // permits the rewrite) and turn the chain walk into an infinite
@@ -1763,16 +1735,9 @@ object Datalake {
     // immutable and the new segment's files are not in the vector — so
     // the new token carries it forward; dropping it would resurrect
     // every deleted row of the base chain
-    val carried = manifestToken(df.sparkSession, tableRoot)
-      .flatMap(parseDvToken)
-      .filter { case (b, _) => base.exists(_ =>
-        isEvolvedDir(df.sparkSession,
-          resolveToken(tableRoot, b))) }
-    val newToken = carried match {
-      case Some((_, dvRel)) => s"dv=v=$version;$dvRel"
-      case None => s"v=$version"
-    }
-    swapManifest(df.sparkSession, tableRoot, newToken)
+    val carried = cur.filter(_.segments.nonEmpty).flatMap(_.dvRel)
+    swapManifest(df.sparkSession, tableRoot,
+      carried.fold(s"v=$version")(rel => s"dv=v=$version;$rel"))
   }
 
   /** OPTIMIZE for an evolved table: rewrite the WHOLE union under one
@@ -1792,7 +1757,7 @@ object Datalake {
     // exactly once with no copy-onto-itself hazard. `tasks` is the file
     // sizing knob (files per partition value = writer tasks holding that
     // value); production tunes it to the target file size
-    val all = readEvolved(spark, tableRoot)
+    val all = scan(spark, evolved(resolve(spark, tableRoot, Selector.Latest)))
     val sized = tasks.map(all.repartition(_)).getOrElse(all)
     stageEvolved(sized, tableRoot, version, partitionBy, base = None)
     swapManifest(spark, tableRoot, s"v=$version")
@@ -1837,16 +1802,23 @@ object Datalake {
     * the whole table.
     */
   def evolvedSegments(spark: SparkSession,
-      tableRoot: String): Seq[EvolvedSegment] = {
-    val cur = currentDataPath(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    segmentChain(spark, cur)
-  }
+      tableRoot: String): Seq[EvolvedSegment] =
+    evolved(resolve(spark, tableRoot, Selector.Latest)).segments
 
-  /** The `_BASE` chain anchored at an explicit segment directory —
-    * [[evolvedSegments]] without the manifest resolution, so version-
-    * addressed reads (time travel, change-feed tokens) can resolve a
-    * HISTORICAL chain head, not just the current one.
+  /** `s` itself when it heads an evolved chain — the loud refusal of the
+    * evolved-only operations on a plain table. */
+  private def evolved(s: Snapshot): Snapshot =
+    if (s.segments.nonEmpty) s
+    else throw new IllegalStateException(
+      s"${s.dataDir} is not an evolved segment (no $EvolvedSpec); " +
+        "refusing to guess — read plain tables via readPublished")
+
+  /** The `_BASE` chain anchored at a segment directory, newest → oldest.
+    * [[resolve]] walks it for every `_SPEC` head, so time travel and
+    * change-feed tokens over evolved versions (round 16) materialize the
+    * chain STATE at that version instead of failing on a directory with
+    * no top-level parquet — or, worse, reading one segment's slice as
+    * the whole table.
     */
   private def segmentChain(spark: SparkSession,
       anchor: String): Seq[EvolvedSegment] = {
@@ -1860,7 +1832,7 @@ object Datalake {
       // rejection): a corrupted or hand-edited _BASE that loops must
       // fail loudly, never recurse until StackOverflowError
       if (seen.contains(key)) throw new IllegalStateException(
-        s"evolvedSegments: cyclic _BASE chain from $anchor — " +
+        s"cyclic _BASE chain from $anchor — " +
           s"$key appears twice; the chain metadata is corrupt")
       val spec = readSmallFile(fs, new org.apache.hadoop.fs.Path(p, EvolvedSpec))
         .getOrElse(throw new IllegalStateException(
@@ -1878,47 +1850,6 @@ object Datalake {
     walk(anchor, Vector.empty, Set.empty)
   }
 
-  /** Read the data one version/commit DIRECTORY serves, resolving
-    * evolved chains (round 16): a dir carrying `_SPEC` is the head of a
-    * `_BASE` chain and reads as the union of its segments' `add/`
-    * scans — so TIME TRAVEL and CHANGE-FEED tokens over evolved
-    * versions materialize the chain STATE at that version instead of
-    * failing on a directory with no top-level parquet (or, worse,
-    * reading one segment's slice as the whole table). A plain dir is
-    * one parquet scan, unchanged.
-    */
-  private def readDataDir(spark: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(p, EvolvedSpec)))
-      segmentChain(spark, dir)
-        .map(s => spark.read.parquet(s.addPath))
-        .reduce(_.unionByName(_))
-    else spark.read.parquet(dir)
-  }
-
-  /** Read the whole evolved table: the union of every segment's `add/`
-    * scan, minus the manifest-current deletion vector if one is live
-    * (round 17 — a raw union would resurrect deleted rows; this is also
-    * what makes [[rewriteEvolved]] FOLD the vector into its migration,
-    * the optimizeCompact discipline). Schemas align by NAME (a partition
-    * column is data in the segments written before it became a key,
-    * directory-encoded after) — column order may differ across layouts,
-    * never the logical schema.
-    */
-  def readEvolved(spark: SparkSession, tableRoot: String): DataFrame = {
-    val anchor = currentDataPath(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    manifestToken(spark, tableRoot).flatMap(parseDvToken) match {
-      case Some((_, dvRel)) =>
-        applyDvChain(spark, tableRoot, anchor, s"$tableRoot/$dvRel")
-      case None =>
-        segmentChain(spark, anchor)
-          .map(s => spark.read.parquet(s.addPath))
-          .reduce(_.unionByName(_))
-    }
-  }
-
   /** Per-segment pruned scan for an equality predicate on `partCol`
     * (dir-name value match, the Hive-layout encoding). Evidence comes
     * from the same directory listing Spark's partition discovery does:
@@ -1933,9 +1864,8 @@ object Datalake {
     // "every read path applies them"): positions are root-relative, so
     // each segment's scan anti-joins the shared sidecar; tables without
     // a live vector keep the identical raw-scan frames
-    val dvPath = manifestToken(spark, tableRoot).flatMap(parseDvToken)
-      .map { case (_, rel) => s"$tableRoot/$rel" }
-    evolvedSegments(spark, tableRoot).map { seg =>
+    val snap = evolved(resolve(spark, tableRoot, Selector.Latest))
+    snap.segments.map { seg =>
       val p = new org.apache.hadoop.fs.Path(seg.addPath)
       val fs = p.getFileSystem(conf)
       val it = fs.listFiles(p, true)
@@ -1953,12 +1883,8 @@ object Datalake {
             f.getPath.toString.contains(s"/$partCol=$value/")) scanned += 1
         }
       }
-      val raw = spark.read.parquet(seg.addPath)
-      val df = dvPath match {
-        case Some(dv) => applyDvTo(spark, raw, tableRoot, dv)
-        case None => raw
-      }
-      EvolvedScan(seg, df, total, scanned)
+      EvolvedScan(seg, scan(spark, snap.copy(segments = Seq(seg))), total,
+        scanned)
     }
   }
 
@@ -1972,19 +1898,14 @@ object Datalake {
     */
   def readVersion(spark: SparkSession, tableRoot: String,
       version: String): DataFrame =
-    readDataDir(spark, s"$tableRoot/v=$version")
+    scan(spark, resolve(spark, tableRoot, Selector.Version(version)))
 
   /** Read the currently-published version via the manifest (a local
     * `v=` dir, or — for an undiverged shallow clone — the `ref=` pointer
     * into the source's version dir).
     */
-  def readPublished(spark: SparkSession, tableRoot: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(root, "MANIFEST"))
-    val v = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    readToken(spark, tableRoot, v)
-  }
+  def readPublished(spark: SparkSession, tableRoot: String): DataFrame =
+    scan(spark, resolve(spark, tableRoot, Selector.Latest))
 
   /** The manifest-current version name, if a manifest exists. For an
     * UNDIVERGED shallow clone the manifest holds a `ref=` pointer, not a
@@ -1993,12 +1914,7 @@ object Datalake {
     * forms).
     */
   def currentVersion(spark: SparkSession, tableRoot: String): Option[String] =
-    manifestToken(spark, tableRoot).map { t =>
-      // a dv= token resolves to its BASE version: that dir is what vacuum
-      // must protect (deleting it would orphan the live vector) and what
-      // version-naming successors count from
-      parseDvToken(t).map(_._1).getOrElse(t).stripPrefix("v=")
-    }
+    current(spark, tableRoot).map(_.version)
 
   /** The raw manifest token (`v=<name>` or `ref=<path>`), if a manifest
     * exists. */
@@ -2020,7 +1936,7 @@ object Datalake {
     * failing on a fabricated `v=ref=...` path.
     */
   def currentDataPath(spark: SparkSession, tableRoot: String): Option[String] =
-    manifestToken(spark, tableRoot).map(resolveToken(tableRoot, _))
+    current(spark, tableRoot).map(_.dataDir)
 
   /** Published version names under `tableRoot`, oldest → newest. Numeric
     * versions order numerically (so "10" is newer than "9" — epoch or
@@ -2127,7 +2043,7 @@ object Datalake {
     * alias-addressed registry. */
   def readAlias(spark: SparkSession, tableRoot: String,
       alias: String): DataFrame =
-    readVersion(spark, tableRoot, resolveAlias(spark, tableRoot, alias))
+    scan(spark, resolve(spark, tableRoot, Selector.Alias(alias)))
 
   /** VACUUM — version retention for the manifest protocol: delete every
     * published version directory except the newest `keepLast` and —
@@ -2154,38 +2070,22 @@ object Datalake {
     // manifest-current version still unions over every dir in its chain,
     // so age-based retention alone could delete a segment a current read
     // depends on (data loss, not expired history). Every retained
-    // version's chain is walked and each chain member that lives under
-    // THIS root is pinned. Chain members OUTSIDE the root (a chain based
-    // on a shallow-clone ref= target) are the other table's segments —
-    // this vacuum cannot protect them, which is exactly the documented
-    // shallowClone hazard: the SOURCE's retention governs them.
-    def chainOf(version: String): Set[String] = {
-      @annotation.tailrec
-      def walk(dir: org.apache.hadoop.fs.Path, acc: Set[String],
-          seen: Set[String]): Set[String] = {
-        val key = fs.makeQualified(dir).toString
-        if (seen.contains(key)) throw new IllegalStateException(
-          s"vacuum: cyclic _BASE chain at $key — refusing to compute " +
-            "retention over corrupt chain metadata")
-        val local = key.startsWith(rootAbs + "/")
-        val acc2 = if (local) acc + dir.getName.stripPrefix("v=") else acc
-        readSmallFile(fs, new org.apache.hadoop.fs.Path(dir, EvolvedBase)) match {
-          // a non-local base is the other table's problem (see above) —
-          // stop pinning but keep failing loudly on local cycles
-          case Some(b) => walk(new org.apache.hadoop.fs.Path(b), acc2,
-            seen + key)
-          case None => acc2
-        }
-      }
-      val vDir = new org.apache.hadoop.fs.Path(root, s"v=$version")
-      // only evolved segments carry a chain; a plain version pins itself
-      if (!fs.exists(new org.apache.hadoop.fs.Path(vDir, EvolvedBase)))
-        Set(version)
-      else walk(vDir, Set.empty, Set.empty)
-    }
+    // version's chain is resolved and each chain member that lives under
+    // THIS root is pinned (a plain version's chain is empty: it pins
+    // itself). Chain members OUTSIDE the root (a chain based on a
+    // shallow-clone ref= target) are the other table's segments — this
+    // vacuum cannot protect them, which is exactly the documented
+    // shallowClone hazard: the SOURCE's retention governs them. A corrupt
+    // (cyclic) chain fails the resolution, so retention is never computed
+    // over it.
     val keepSeeds = versions.takeRight(keepLast).toSet ++
       currentVersion(spark, tableRoot)
-    val keep = keepSeeds.flatMap(chainOf) ++ keepSeeds
+    val keep = keepSeeds ++ keepSeeds.flatMap(v =>
+      resolve(spark, tableRoot, Selector.Version(v)).segments
+        .filter(seg => fs.makeQualified(
+          new org.apache.hadoop.fs.Path(seg.addPath).getParent)
+          .toString.startsWith(rootAbs + "/"))
+        .map(_.version))
     val drop = versions.filterNot(keep)
     drop.foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$v"), true)
@@ -2206,8 +2106,8 @@ object Datalake {
     val lock = commitLocks.computeIfAbsent(
       fs.makeQualified(root).toString, _ => new Object)
     lock.synchronized {
-      val dvKeep = manifestToken(spark, tableRoot).flatMap(parseDvToken)
-        .map { case (_, rel) => rel.stripPrefix(s"$DvDir/") }.toSet
+      val dvKeep = current(spark, tableRoot).flatMap(_.dvRel)
+        .map(_.stripPrefix(s"$DvDir/")).toSet
       val dvBase = new org.apache.hadoop.fs.Path(root, DvDir)
       if (fs.exists(dvBase)) fs.listStatus(dvBase).foreach { s =>
         if (!dvKeep.contains(s.getPath.getName)) fs.delete(s.getPath, true)
@@ -2348,7 +2248,7 @@ object Datalake {
       readVersion(spark, tableRoot, toV), keys, fromV, toV)
 
   /** [[changeFeed]] between two COMMIT TOKENS — the general form the
-    * streaming source needs: snapshots resolve through [[readToken]], so
+    * streaming source needs: both tokens resolve and scan, so
     * a DELETION-VECTOR commit materializes as delete rows (the rows the
     * new vector hides that the old one didn't), a MERGE commit as its
     * arms, and a maintenance rewrite (byte-identical data under a new
@@ -2358,19 +2258,11 @@ object Datalake {
     * UUID and must not leak into hashed output).
     */
   def changeFeedTokens(spark: SparkSession, tableRoot: String,
-      fromToken: String, toToken: String, keys: Seq[String]): DataFrame =
-    changeFeedFrames(readToken(spark, tableRoot, fromToken),
-      readToken(spark, tableRoot, toToken), keys,
-      tokenLabel(fromToken), tokenLabel(toToken))
-
-  /** Deterministic display label for a commit token (see
-    * [[changeFeedTokens]]). */
-  private[graft] def tokenLabel(token: String): String =
-    parseDvToken(token) match {
-      case Some((base, _)) => s"${tokenLabel(base)}+dv"
-      case None if token.startsWith("ref=") => "ref"
-      case None => token.stripPrefix("v=")
-    }
+      fromToken: String, toToken: String, keys: Seq[String]): DataFrame = {
+    val a = resolve(spark, tableRoot, Selector.Token(fromToken))
+    val b = resolve(spark, tableRoot, Selector.Token(toToken))
+    changeFeedFrames(scan(spark, a), scan(spark, b), keys, a.label, b.label)
+  }
 
   private def changeFeedFrames(a0: DataFrame, b0: DataFrame,
       keys: Seq[String], fromV: String, toV: String): DataFrame = {
@@ -2433,35 +2325,22 @@ object Datalake {
       clusterBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       partitionBy: Option[Seq[String]] = None): String = {
     require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val fsOpt = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stripe = in-process serialization; the commit rides the log on CAS
-    // tables (commitDerivedToken) so a cross-process delete landing
-    // inside the token-read -> commit window forces a re-derivation
-    withRootLock(spark, tableRoot) {
-    var attempt = 0
-    while (attempt < 5) {
-    attempt += 1
-    val seqAtRead = latestCommitSeq(spark, tableRoot)
-    val cur = currentVersion(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    // currentDataPath, not a hand-built v= dir: on an UNDIVERGED shallow
-    // clone the manifest is a ref= pointer and OPTIMIZE-on-clone is that
-    // clone's first divergence (a compacted local v1; the source stays
-    // untouched)
-    val dataPath = currentDataPath(spark, tableRoot).get
+    deriveAndCommit(spark, tableRoot, "optimize") { snap =>
     // partitionBy=None PRESERVES the current version's Hive layout
     // (round-11 ADVICE: an OPTIMIZE that silently flattened a partitioned
     // table kept the rows but destroyed partition-directory pruning for
-    // every later reader); Some(Nil) is the explicit flatten.
-    val parts = partitionBy.getOrElse(detectPartitionColumns(spark, dataPath))
-    // token-aware read, NOT a raw dir scan: on a deletion-vector table a
-    // raw scan would resurrect every deleted row into the rewrite.
+    // every later reader); Some(Nil) is the explicit flatten. The
+    // snapshot's data dir follows ref=: on an UNDIVERGED shallow clone
+    // OPTIMIZE is that clone's first divergence (a compacted local v1;
+    // the source stays untouched).
+    val parts =
+      partitionBy.getOrElse(detectPartitionColumns(spark, snap.dataDir))
+    // the snapshot's scan, NOT a raw dir scan: on a deletion-vector table
+    // a raw scan would resurrect every deleted row into the rewrite.
     // OPTIMIZE instead FOLDS the vector (the rewrite contains only live
     // rows) and the new plain v= token retires it — Delta's compaction
     // contract.
-    val df0 = readToken(spark, tableRoot,
-      manifestToken(spark, tableRoot).get)
+    val df0 = scan(spark, snap)
     val cf = org.apache.spark.sql.functions.col _
     val df =
       if (clusterBy.nonEmpty)
@@ -2480,17 +2359,10 @@ object Datalake {
         // without a per-task file explosion (nFiles tasks × values files)
         df0.repartition(nFiles, parts.map(cf): _*)
       else df0.repartition(nFiles)
-    val newV = nextNumericVersion(spark, tableRoot, Some(cur), "-optimized")
+    val newV = nextNumericVersion(spark, tableRoot, Some(snap.version),
+      "-optimized")
     stageVersion(df, tableRoot, newV, parts, statsCols)
-    if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-      return newV
-    // lost to a cross-process CAS writer: discard and re-derive
-    try { fsOpt.delete(new org.apache.hadoop.fs.Path(
-      s"$tableRoot/v=$newV"), true); () }
-    catch { case _: Throwable => () }
-    }
-    throw new ConcurrentCommitException(
-      s"optimize on $tableRoot lost 5 commit races — retry")
+    (newV, None, newV)
     }
   }
 
@@ -2498,7 +2370,7 @@ object Datalake {
     * round-11 verdict #6): rewrite the manifest-current version into a
     * NEW version clustered on the Morton interleaving of TWO keys, so
     * every output file gets a tight min/max envelope on BOTH columns and
-    * a rectangle predicate prunes through [[readPublishedPrunedMulti]]
+    * a rectangle predicate prunes through [[readPublishedPruned]]
     * on both dimensions at once — the re-cluster maintenance pass for
     * 2-dimensional access patterns, versioned and atomic like any
     * publish (old version retained for time travel until vacuum).
@@ -2551,57 +2423,35 @@ object Datalake {
         Int) => org.apache.spark.sql.Column): String = {
     require(nFiles >= 1 && nFiles.toLong <= (1L << (2 * bits)),
       s"nFiles must be in [1, 4^bits], got $nFiles (bits=$bits)")
-    val fs = new org.apache.hadoop.fs.Path(tableRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stripe held across token read -> commit (in-process serialization);
-    // the COMMIT rides the log on CAS tables (commitDerivedToken): the
-    // rewrite derives from the token read at the top, and a cross-process
-    // delete committing inside the window must force a re-derivation,
-    // not be discarded by the swap
-    withRootLock(spark, tableRoot) {
-      var attempt = 0
-      while (attempt < 5) {
-        attempt += 1
-        val seqAtRead = latestCommitSeq(spark, tableRoot)
-        val cur = currentVersion(spark, tableRoot).getOrElse(
-          throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-        val mask = (1L << bits) - 1
-        val z = curve(
-          org.apache.spark.sql.functions.col(xCol).bitwiseAND(
-            org.apache.spark.sql.functions.lit(mask)),
-          org.apache.spark.sql.functions.col(yCol).bitwiseAND(
-            org.apache.spark.sql.functions.lit(mask)), bits)
-        // multiply-shift range assignment: (d * nFiles) >> 2·bits — exact
-        // integer fixed-width ranges for ANY nFiles (for a power of two it
-        // reduces to the plain shift, so the q_optimize_zorder oracle's
-        // `z >> 14` replays unchanged). Non-power-of-two counts matter: a
-        // width that is a power of FOUR makes every file a dyadic-aligned
-        // block where Morton and Hilbert are geometrically identical —
-        // q_optimize_hilbert uses 63 files precisely to unalign the
-        // boundaries and let the curves separate.
-        val zfile = org.apache.spark.sql.functions
-          .shiftright(z * org.apache.spark.sql.functions.lit(nFiles.toLong),
-            2 * bits).cast("int")
-        // token-aware read (see optimize): a curve rewrite folds any live
-        // deletion vector instead of resurrecting its rows
-        val df = readToken(spark, tableRoot,
-            manifestToken(spark, tableRoot).get)
-          .withColumn("zfile", zfile)
-          // one partition per curve range → exactly one file per zfile dir
-          .repartition(org.apache.spark.sql.functions.col("zfile"))
-        val newV = nextNumericVersion(spark, tableRoot, Some(cur), suffix)
-        stageVersion(df, tableRoot, newV, Seq("zfile"),
-          (Seq(xCol, yCol) ++ extraStatsCols).distinct)
-        if (commitDerivedToken(spark, tableRoot, seqAtRead, s"v=$newV"))
-          return newV
-        // lost to a cross-process CAS writer: the rewrite is stale —
-        // discard the staged dir and re-derive over the winner's state
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableRoot/v=$newV"), true); () }
-        catch { case _: Throwable => () }
-      }
-      throw new ConcurrentCommitException(
-        s"optimize$suffix on $tableRoot lost 5 commit races — retry")
+    deriveAndCommit(spark, tableRoot, s"optimize$suffix") { snap =>
+      val mask = (1L << bits) - 1
+      val z = curve(
+        org.apache.spark.sql.functions.col(xCol).bitwiseAND(
+          org.apache.spark.sql.functions.lit(mask)),
+        org.apache.spark.sql.functions.col(yCol).bitwiseAND(
+          org.apache.spark.sql.functions.lit(mask)), bits)
+      // multiply-shift range assignment: (d * nFiles) >> 2·bits — exact
+      // integer fixed-width ranges for ANY nFiles (for a power of two it
+      // reduces to the plain shift, so the q_optimize_zorder oracle's
+      // `z >> 14` replays unchanged). Non-power-of-two counts matter: a
+      // width that is a power of FOUR makes every file a dyadic-aligned
+      // block where Morton and Hilbert are geometrically identical —
+      // q_optimize_hilbert uses 63 files precisely to unalign the
+      // boundaries and let the curves separate.
+      val zfile = org.apache.spark.sql.functions
+        .shiftright(z * org.apache.spark.sql.functions.lit(nFiles.toLong),
+          2 * bits).cast("int")
+      // the snapshot's scan (see optimize): a curve rewrite folds any
+      // live deletion vector instead of resurrecting its rows
+      val df = scan(spark, snap)
+        .withColumn("zfile", zfile)
+        // one partition per curve range → exactly one file per zfile dir
+        .repartition(org.apache.spark.sql.functions.col("zfile"))
+      val newV = nextNumericVersion(spark, tableRoot, Some(snap.version),
+        suffix)
+      stageVersion(df, tableRoot, newV, Seq("zfile"),
+        (Seq(xCol, yCol) ++ extraStatsCols).distinct)
+      (newV, None, newV)
     }
   }
 
@@ -2793,42 +2643,30 @@ object Datalake {
   /** STATS-PRUNED read of the published version (round-10 verdict #3 —
     * the highest-frequency 100 TB read-path feature): resolve the
     * manifest, load the version's file statistics, and open ONLY the
-    * files whose [min, max] envelope on `column` intersects [lo, hi].
-    * Files with no recorded envelope for `column` are always kept —
+    * files whose envelope intersects EVERY `(column, lo, hi)` interval.
+    * Files with no recorded envelope for a column are always kept —
     * pruning may drop a file only when the stats PROVE it has no
     * matching row, so the result equals the unpruned scan + predicate by
     * construction (the caller still applies the exact predicate; this
     * eliminates IO, not filter work — same division of labor as parquet
-    * row-group skipping, one level up).
+    * row-group skipping, one level up). Conjunction is the right
+    * monotone composition for 2+ dimensions (the read path Z-order
+    * clustering exists for): each predicate can only shrink the kept
+    * set, never wrongly drop a file another predicate would keep.
     */
   def readPublishedPruned(spark: SparkSession, tableRoot: String,
-      column: String, lo: Double, hi: Double): PrunedScan =
-    readPublishedPrunedMulti(spark, tableRoot, Seq((column, lo, hi)))
-
-  /** Multi-predicate stats-pruned read — the 2+-dimensional companion to
-    * [[readPublishedPruned]] (and the read path Z-order clustering
-    * exists for): a file is opened only when its envelope intersects
-    * EVERY `(column, lo, hi)` interval; a single missing envelope keeps
-    * the file (prune only on proof). Conjunction is the right monotone
-    * composition: each predicate can only shrink the kept set, never
-    * wrongly drop a file another predicate would keep.
-    */
-  def readPublishedPrunedMulti(spark: SparkSession, tableRoot: String,
       preds: Seq[(String, Double, Double)]): PrunedScan = {
     require(preds.nonEmpty, "at least one (column, lo, hi) predicate")
-    // the token is read ONCE and both the data dir and the deletion
-    // vector derive from it — a second manifest read later could observe
-    // a concurrent swap and pair one version's files with another
-    // commit's vector (review finding). Resolves ref= tokens too: an
-    // undiverged shallow clone prunes with the SOURCE version's stats
-    // sidecar (stats live inside the version dir, so the pointer carries
-    // them along for free).
-    val token = manifestToken(spark, tableRoot).getOrElse(
-      throw new IllegalStateException(s"no MANIFEST under $tableRoot"))
-    val dataPath = resolveToken(tableRoot, token)
-    val stats = readFileStats(spark, dataPath)
+    // ONE snapshot: the data dir, its stats and the deletion vector all
+    // belong to the same commit. Resolves ref= tokens too: an undiverged
+    // shallow clone prunes with the SOURCE version's stats sidecar
+    // (stats live inside the version dir, so the pointer carries them
+    // along for free).
+    val snap = resolve(spark, tableRoot, Selector.Latest)
+    val stats = readFileStats(spark, snap.dataDir)
     require(stats.nonEmpty,
-      s"no $StatsFile under $dataPath — publish with statsCols to prune")
+      s"no $StatsFile under ${snap.dataDir} — " +
+        "publish with statsCols to prune")
     val keep = stats.filter { f =>
       preds.forall { case (column, lo, hi) =>
         f.cols.get(column) match {
@@ -2837,21 +2675,11 @@ object Datalake {
         }
       }
     }
-    val raw =
-      if (keep.isEmpty)
-        spark.read.parquet(dataPath).filter(org.apache.spark.sql.functions
-          .lit(false))
-      else spark.read.option("basePath", dataPath)
-        .parquet(keep.map(f => s"$dataPath/${f.file}"): _*)
     // a live deletion vector still applies to a pruned scan (pruning
     // narrows IO, never visibility); rows/files evidence stays PHYSICAL —
     // it measures what the scan opens, and DV rows are still read
-    val df = parseDvToken(token) match {
-      case Some((_, dvRel)) =>
-        applyDvTo(spark, raw, dataPath, s"$tableRoot/$dvRel")
-      case None => raw
-    }
-    PrunedScan(df, stats.length, keep.length, keep.map(_.rows).sum)
+    PrunedScan(scan(spark, snap, Some(keep.map(_.file))), stats.length,
+      keep.length, keep.map(_.rows).sum)
   }
 
   /** Persist as a bucketed+sorted table: two fact tables bucketed on their

@@ -272,7 +272,8 @@ object DatalakeStreams {
                   s"replicateStream: no diff base for commit $seq " +
                     s"(predecessor=$why, replicaLive=$replicaLive) — " +
                     "re-syncing from the commit's full snapshot")
-                Datalake.publish(Datalake.readToken(sp, srcRoot, token),
+                Datalake.publish(Datalake.scan(sp, Datalake.resolve(sp,
+                  srcRoot, Datalake.Selector.Token(token))),
                   replicaRoot, s"r$seq")
             }
           }
@@ -337,14 +338,16 @@ object DatalakeStreams {
         var emitted = Datalake.currentVersion(sp, sinkRoot).isDefined
         def snapshotAsInserts(token: String): DataFrame = {
           // initial snapshot as inserts (the Delta streaming-source
-          // convention) — readToken, so even a first commit carrying
-          // a vector resolves correctly
-          val snap = Datalake.readToken(sp, tableRoot, token)
-          val payload = snap.columns.filterNot(keys.contains).toSeq
-          snap.select(keys.map(col) ++ payload.map(col) ++ Seq(
+          // convention) — resolved and scanned, so even a first commit
+          // carrying a vector resolves correctly
+          val snap = Datalake.resolve(sp, tableRoot,
+            Datalake.Selector.Token(token))
+          val rows = Datalake.scan(sp, snap)
+          val payload = rows.columns.filterNot(keys.contains).toSeq
+          rows.select(keys.map(col) ++ payload.map(col) ++ Seq(
             lit("insert").as("_change_type"),
             lit("initial").as("_from_version"),
-            lit(Datalake.tokenLabel(token)).as("_to_version")): _*)
+            lit(snap.label).as("_to_version")): _*)
         }
         val feeds = recs.flatMap { case (seq, token) =>
           val out: Option[DataFrame] = if (token.startsWith("ref=")) {

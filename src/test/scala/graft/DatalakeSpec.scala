@@ -325,7 +325,7 @@ class DatalakeSpec extends SparkSpecBase {
     assert(stats.map(_.rows).sum === 800)
     assert(stats.forall(f => f.cols.contains("k") && f.cols.contains("v")))
 
-    val s = Datalake.readPublishedPruned(spark, root, "k", 150, 349)
+    val s = Datalake.readPublishedPruned(spark, root, Seq(("k", 150, 349)))
     assert(s.filesTotal === 8 && s.filesScanned === 3,
       s"expected 3/8 files, got ${s.filesScanned}/${s.filesTotal}")
     assert(s.rowsInScannedFiles === 300)
@@ -338,11 +338,11 @@ class DatalakeSpec extends SparkSpecBase {
     assert(pruned === full && pruned.length === 200)
 
     // a column with NO recorded stats can never prune: every file is kept
-    val noStats = Datalake.readPublishedPruned(spark, root, "nope", 0, 1)
+    val noStats = Datalake.readPublishedPruned(spark, root, Seq(("nope", 0, 1)))
     assert(noStats.filesScanned === noStats.filesTotal)
 
     // a predicate outside every envelope opens zero files, returns empty
-    val none = Datalake.readPublishedPruned(spark, root, "k", 5000, 6000)
+    val none = Datalake.readPublishedPruned(spark, root, Seq(("k", 5000, 6000)))
     assert(none.filesScanned === 0 && none.df.count() === 0)
   }
 
@@ -365,7 +365,7 @@ class DatalakeSpec extends SparkSpecBase {
     assert(got === want)
     // old version still time-travels; stats sidecar works on the rewrite
     assert(Datalake.readVersion(spark, root, "7").count() === 1000)
-    val s = Datalake.readPublishedPruned(spark, root, "k", 0, 100)
+    val s = Datalake.readPublishedPruned(spark, root, Seq(("k", 0, 100)))
     assert(s.filesTotal === 2 && s.filesScanned === 1,
       s"range clustering should prune to 1/2 files, got ${s.filesScanned}")
   }
@@ -401,7 +401,7 @@ class DatalakeSpec extends SparkSpecBase {
     Datalake.publish(df.repartitionByRange(2, col("k")), src3, "1",
       Nil, Seq("k"))
     Datalake.shallowClone(spark, src3, dst3)
-    val pruned = Datalake.readPublishedPruned(spark, dst3, "k", 0, 10)
+    val pruned = Datalake.readPublishedPruned(spark, dst3, Seq(("k", 0, 10)))
     assert(pruned.filesTotal === 2 && pruned.filesScanned === 1,
       s"undiverged clone must prune via the source sidecar, " +
         s"got ${pruned.filesScanned}/${pruned.filesTotal}")
@@ -532,7 +532,8 @@ class DatalakeSpec extends SparkSpecBase {
     assert(n3 === 20)
 
     // a stats-pruned read applies the vector too
-    val pruned = Datalake.readPublishedPruned(spark, root, "id", 0.0, 20.0)
+    val pruned =
+      Datalake.readPublishedPruned(spark, root, Seq(("id", 0.0, 20.0)))
     assert(pruned.df.filter(col("id") <= 20).count() === 11,
       "pruned scan must not resurrect deleted rows") // ids 10..20
 
@@ -743,7 +744,7 @@ class DatalakeSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions.col
     // transact over a deleted table: the RMW snapshot must fold the
     // vector (r14 review finding: deletes now ride the commit log, so the
-    // newest record can be dv= — a raw resolveToken read resurrected)
+    // newest record can be dv= — a raw base-dir read resurrected)
     val root = s"${Files.createTempDirectory("graft-txndv")}/t"
     Datalake.publish(spark.range(0, 100).toDF("id"), root, "1")
     assert(Datalake.deleteWhere(spark, root, col("id") < 20) === 20)

@@ -143,4 +143,45 @@ class GraphSpec extends SparkSpecBase {
       .split("== Initial Plan ==")(0)
     assert(!plan.contains("CartesianProduct"))
   }
+
+  test("bfsDistances releases both caches and restores the loop conf when materialization throws") {
+    val boom = udf { (x: Long) =>
+      if (x >= 0L) throw new IllegalStateException("derivation failed")
+      x
+    }
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val sc = spark.sparkContext
+    // Suites share the SparkContext, and its cleaner unpersists other
+    // suites' garbage at any time: judge only the RDDs a call left
+    // persisted, and retry so that one racing suite cannot fail a clean
+    // call. Each attempt derives a NEW plan (`n` is folded into it): a
+    // leaked cache of an identical plan would be reused by the next
+    // attempt and hide the leak.
+    def fails(edges: Int => org.apache.spark.sql.DataFrame,
+        sources: org.apache.spark.sql.DataFrame, why: String): Unit = {
+      val leaked = scala.collection.mutable.ArrayBuffer.empty[Int]
+      while (leaked.size < 3 && !leaked.contains(0)) {
+        val confBefore = keys.map(spark.conf.getOption)
+        val cachedBefore = sc.getPersistentRDDs.keySet.toSet
+        val e = intercept[Exception](
+          Graph.bfsDistances(edges(leaked.size), sources, 3))
+        assert(Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(t => Option(t.getMessage).exists(_.contains(why))),
+          s"unexpected failure $e")
+        assert(keys.map(spark.conf.getOption) === confBefore,
+          "AQE and the shuffle width must be restored")
+        leaked += (sc.getPersistentRDDs.keySet.toSet -- cachedBefore).size
+      }
+      assert(leaked.contains(0), "the raw and partitioned edge caches " +
+        s"must both be released; RDDs left per attempt: $leaked")
+    }
+    val ids = spark.range(8)
+    // the edge derivation itself throws while its cache materializes
+    fails(n => ids.select(col("id").as("src"), boom(col("id") + n).as("dst")),
+      Seq(0L).toDF("node"), "derivation failed")
+    // the edges materialize; the loop then fails under its own conf
+    fails(n => ids.select(col("id").as("src"), (col("id") + 1 + n).as("dst")),
+      ids.select(col("id").as("not_node")), "`node`")
+  }
 }

@@ -95,7 +95,7 @@ class Round15cSpec extends SparkSpecBase {
     assert(segs.map(_.version) === Seq("3", "2", "1"), "newest → oldest")
     assert(segs.map(_.spec) === Seq(Nil, Seq("day"), Seq("event_type")))
     // the union is exactly the source table — nothing dropped or doubled
-    assert(Datalake.readEvolved(spark, root).count() === e.count())
+    assert(Datalake.readPublished(spark, root).count() === e.count())
     // v1's files were NOT touched by the later evolutions (zero rewrite)
     val v1After = new java.io.File(s"$root/v=1/add").listFiles()
       .filter(_.isDirectory).map(_.lastModified()).toSeq
@@ -356,11 +356,11 @@ class Round15cSpec extends SparkSpecBase {
       .repartition(1), root, "1", Seq("event_type"))
     Datalake.publishEvolved(e.filter(col("event_id") % 2 === 1)
       .repartition(1), root, "2", Seq("day"))
-    val total = Datalake.readEvolved(spark, root).count()
+    val total = Datalake.readPublished(spark, root).count()
     Datalake.rewriteEvolved(spark, root, "3", Seq("day"), tasks = Some(1))
     val segs = Datalake.evolvedSegments(spark, root)
     assert(segs.map(_.version) === Seq("3"), "migrated chain is one segment")
-    assert(Datalake.readEvolved(spark, root).count() === total)
+    assert(Datalake.readPublished(spark, root).count() === total)
     // the superseded chain's dirs are immutable and still readable —
     // time travel until retention retires them
     assert(spark.read.parquet(s"$root/v=1/add").count() +

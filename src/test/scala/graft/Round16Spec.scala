@@ -29,7 +29,7 @@ class Round16Spec extends SparkSpecBase {
     // current v3, so NOTHING may go and the read must be untouched
     assert(Datalake.vacuum(spark, root, keepLast = 1) === Seq())
     assert(Datalake.listVersions(spark, root) === Seq("1", "2", "3"))
-    assert(Datalake.readEvolved(spark, root).collect()
+    assert(Datalake.readPublished(spark, root).collect()
       .map(_.getAs[Long]("id")).sorted.toSeq === Seq(1L, 2L, 3L))
   }
 
@@ -38,7 +38,7 @@ class Round16Spec extends SparkSpecBase {
     Datalake.rewriteEvolved(spark, root, "4", Seq("day"))
     assert(Datalake.vacuum(spark, root, keepLast = 1) === Seq("1", "2", "3"))
     assert(Datalake.listVersions(spark, root) === Seq("4"))
-    assert(Datalake.readEvolved(spark, root).collect()
+    assert(Datalake.readPublished(spark, root).collect()
       .map(_.getAs[Long]("id")).sorted.toSeq === Seq(1L, 2L, 3L))
   }
 
@@ -69,7 +69,7 @@ class Round16Spec extends SparkSpecBase {
       .collect()
     assert(feed.map(r => (r.getAs[Long]("id"),
       r.getAs[String]("_change_type"))).toSet === Set((3L, "insert")))
-    // readPublished through the manifest matches readEvolved
+    // readPublished through the manifest serves the chain state
     assert(Datalake.readPublished(spark, root).count() === 3L)
   }
 
@@ -92,7 +92,7 @@ class Round16Spec extends SparkSpecBase {
     }
     assert(ex.getMessage.contains("cyclic"))
     // the chain is still intact and readable
-    assert(Datalake.readEvolved(spark, root).count() === 3L)
+    assert(Datalake.readPublished(spark, root).count() === 3L)
   }
 
   test("evolvedSegments fails loudly on a corrupted cyclic _BASE, never recurses") {

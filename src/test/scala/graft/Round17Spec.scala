@@ -214,7 +214,7 @@ class Round17Spec extends SparkSpecBase {
     def liveIds(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("id").collect().map(_.getLong(0)).toSet
     assert(liveIds(Datalake.readPublished(spark, root)) === Set(2L, 4L))
-    assert(liveIds(Datalake.readEvolved(spark, root)) === Set(2L, 4L))
+    assert(liveIds(Datalake.readPublished(spark, root)) === Set(2L, 4L))
     // version-addressed time travel reads the PHYSICAL chain snapshot —
     // the vector is manifest-level state (the plain-table contract)
     assert(liveIds(Datalake.readVersion(spark, root, "2")) ===
@@ -272,7 +272,7 @@ class Round17Spec extends SparkSpecBase {
       java.nio.file.Paths.get(s"$root/MANIFEST")), "UTF-8").trim
     assert(dvToken.startsWith("dv=v=2;"), s"unexpected token $dvToken")
     // from the pre-delete chain head to the DV commit: the feed must be
-    // exactly the two hidden rows as deletes (readToken resolves the
+    // exactly the two hidden rows as deletes (resolve + scan read the
     // chain STATE on both sides — the r17 chain-DV branch)
     val feed = Datalake.changeFeedTokens(spark, root, "v=2", dvToken,
         Seq("id"))
